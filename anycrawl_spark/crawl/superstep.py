@@ -8,9 +8,11 @@ Progress.ts) as deterministic Spark supersteps:
     per round r:
       pending  -> politeness window -> budget window -> (host-hash, salted)
                -> fetch (mapInPandas, simulated)  -> status classify (F7)
-      ok       -> extract spans/links (mapInPandas) -> documents append
-      links    -> posexplode -> canonicalize -> depth/scope/path/robots gates
-               -> intra-round first-wins dedup -> bloom+anti-join vs seen
+      ok       -> extract spans/links + canonicalize + scope/path/robots
+                  gates, all in the same mapInPandas pass -> documents append
+      links    -> explode(cand_links) -> depth gate
+               -> intra-round first-wins dedup (persisted once)
+               -> bloom+anti-join vs seen
                -> discovery_seq assignment (window) -> frontier append
       retries  -> attempt+1, next_eligible_round = r + 2^attempt
       progress -> per-job aggregates -> finalize check -> snapshot commit
@@ -184,11 +186,13 @@ class CrawlEngine:
                 # takes all of it
                 if h in self.robots_by_host:
                     self.robots_rfc_by_host[h] += self.robots_by_host.pop(h)
-        self._candidate_gate = make_candidate_gate(
+        # the per-batch kernel behind the candidate gate UDF: it runs inside
+        # fetch_extract's pass, so every link crosses into Python once
+        self._link_gate = make_candidate_gate(
             jobs,
             {} if use_dim else self.robots_by_host,
             {} if use_dim else self.robots_rfc_by_host,
-        )
+        ).func
         # F2 shouldScrapeUrl (Base.ts:465-495,992-1002): pages always crawl
         # and expand links, but only scrape_paths-matching pages persist a
         # document. Jobs without scrape_paths save everything (the common
@@ -198,15 +202,6 @@ class CrawlEngine:
             for j in jobs
             if j.get("scrape_paths")
         }
-        # the current-URL exclude quirk needs the parent URL in the gate;
-        # without any excludes the column is a pruned-away constant (the
-        # frontier hot path ships no extra Arrow data). Raw-array check:
-        # exclude_paths=['  '] still triggers the quirk (Base.ts:361)
-        from anycrawl_spark.functions.patterns import excludes_configured
-
-        self._gate_needs_parent = any(
-            excludes_configured(j.get("exclude_paths")) for j in jobs
-        )
         self._scrape_gate = None
         if self._scrape_paths_by_job:
             scrape_map = self._scrape_paths_by_job
@@ -573,9 +568,10 @@ class CrawlEngine:
         # deferred + eligible-but-capped rows stay pending unchanged
         not_sched = flagged.filter(~F.col("_sched")).select(*frontier_cols)
 
-        # --- fetch+extract: one fused python stage (no raw HTML through
-        # Arrow, one worker per task chain); salt/spread by url hash
-        # (politeness already enforced by the windows above) ----------------
+        # --- fetch+extract+link gate: one fused python stage (no raw HTML
+        # through Arrow, one worker per task chain, each link gated once);
+        # salt/spread by url hash (politeness already enforced by the windows
+        # above) -------------------------------------------------------------
         sched = sched.repartition(
             self.fetch_partitions, F.pmod(F.col("url_hash"), F.lit(self.fetch_partitions))
         )
@@ -594,7 +590,7 @@ class CrawlEngine:
                 ),
                 round_no=rnd,
             )
-        fetched = fetch_extract(sched, self.web).persist()
+        fetched = fetch_extract(sched, self.web, link_gate=self._link_gate).persist()
 
         ok = fetched.filter(F.col("status_code") == 200)
         retryable = fetched.filter(
@@ -611,71 +607,60 @@ class CrawlEngine:
 
         docs = ok  # extraction already ran in the fused stage
 
-        # --- documents + metrics appends -----------------------------------
+        # --- documents + metrics appends (run in the summary pool below) ---
         t_defs = _time.time()
         docs_saved = docs
         if self._scrape_gate is not None:
             docs_saved = docs.filter(
                 self._scrape_gate(F.col("job_id"), F.col("url"))
             )
-        self.store.append(
-            "documents",
-            docs_saved.select(
-                "job_id",
-                F.concat(F.lit("doc_"), F.conv(F.abs(F.col("url_hash")).cast("string"), 10, 16)).alias("doc_id"),
-                "url", "url_hash", "host", "depth",
-                F.lit(rnd).alias("round"),
-                "status_code", "title", "markdown", "spans",
-                F.size("links").alias("n_links"),
-            ),
-            round_no=rnd,
+        documents_df = docs_saved.select(
+            "job_id",
+            F.concat(F.lit("doc_"), F.conv(F.abs(F.col("url_hash")).cast("string"), 10, 16)).alias("doc_id"),
+            "url", "url_hash", "host", "depth",
+            F.lit(rnd).alias("round"),
+            "status_code", "title", "markdown", "spans",
+            F.size("links").alias("n_links"),
         )
-        t_docs_append = _time.time()
         metrics_df = fetched.select(
             "job_id", F.lit(rnd).alias("round"), "url_hash", "host",
             "status_code", "latency_ms", "size_bytes",
         )
 
         # --- link expansion -> candidates ----------------------------------
+        # (the gate already ran in fetch_extract: cand_links holds the kept,
+        # canonical links; everything below is JVM column work)
         seen = self.store.read_appends("seen")
-        links = docs.select(
-            "job_id",
-            F.col("depth").alias("parent_depth"),
-            F.col("discovery_seq").alias("parent_seq"),
-            F.col("url_hash").alias("parent_url_hash"),
-            F.col("url").alias("parent_url"),
-            F.posexplode("links").alias("ordinal", "url"),
-        )
         max_depth_map = F.create_map(
             *[F.lit(x) for kv in self.max_depth_by_job.items() for x in kv]
         )
-        # one fused python stage: canonicalize + scope + paths + robots
         cand = (
-            links.withColumn("depth", F.col("parent_depth") + 1)
-            .filter(F.col("depth") <= max_depth_map[F.col("job_id")])
-            .withColumn(
-                "_g",
-                self._candidate_gate(
-                    F.col("job_id"),
-                    F.col("url"),
-                    F.col("parent_url") if self._gate_needs_parent
-                    else F.lit(None).cast("string"),
-                ),
+            docs.filter(F.col("depth") + 1 <= max_depth_map[F.col("job_id")])
+            .select(
+                "job_id",
+                F.col("depth").alias("parent_depth"),
+                F.col("discovery_seq").alias("parent_seq"),
+                F.col("url_hash").alias("parent_url_hash"),
+                F.explode("cand_links").alias("_c"),
             )
-            .filter(F.col("_g.keep"))
-            .withColumn("url", F.col("_g.url"))
-            .withColumn("host", F.col("_g.host"))
-            .drop("_g", "parent_url")
+            .select(
+                "job_id", "parent_depth", "parent_seq", "parent_url_hash",
+                F.col("_c.ordinal").alias("ordinal"),
+                F.col("_c.url").alias("url"),
+                (F.col("parent_depth") + 1).alias("depth"),
+                F.col("_c.host").alias("host"),
+            )
             .withColumn("url_hash", F.xxhash64("url"))
         )
 
-        # intra-round first-wins dedup: min (parent_depth, parent_seq, ordinal)
+        # intra-round first-wins dedup: min (parent_depth, parent_seq, ordinal).
+        # Persisted: filter_fresh reads its candidates in two union branches.
         w_first = Window.partitionBy("job_id", "url_hash").orderBy(
             "parent_depth", "parent_seq", "ordinal"
         )
         cand = cand.withColumn("_rn", F.row_number().over(w_first)).filter(
             F.col("_rn") == 1
-        ).drop("_rn")
+        ).drop("_rn").persist()
 
         fresh = filter_fresh(
             cand, seen, self.num_buckets,
@@ -769,26 +754,46 @@ class CrawlEngine:
         fresh_summary = fresh.groupBy("job_id").agg(F.count("*").alias("c")).select(
             "job_id", F.lit("fresh").alias("k"), "c"
         )
-        # Overlap the independent per-round actions: metrics + terminal-log
-        # appends run while the summary collect materializes the fresh chain
-        # (fetched is already cached by the documents append above; each
-        # append targets a distinct table — see SnapshotStore locking).
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_metrics = pool.submit(self.store.append, "metrics", metrics_df, rnd)
-            f_log = pool.submit(
-                self.store.append, "frontier_log",
-                terminal.select(*frontier_cols), rnd,
+        # the shard merge's dirty buckets ride the same collect as k="bucket"
+        fresh_keyed = with_dedup_key(
+            fresh.select("job_id", "url_hash"), self.num_buckets
+        )
+        bucket_summary = fresh_keyed.select(
+            F.lit(None).cast("string").alias("job_id"),
+            F.lit("bucket").alias("k"),
+            F.col("bucket").cast("long").alias("c"),
+        ).distinct()
+        # Overlap the independent per-round actions: documents + metrics +
+        # terminal-log appends run while the summary collect materializes the
+        # fresh chain. All of them read the cached `fetched` (its partitions
+        # are computed once and shared); each append targets a distinct
+        # table — see SnapshotStore locking.
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            appends = [
+                pool.submit(self.store.append, "documents", documents_df, rnd),
+                pool.submit(self.store.append, "metrics", metrics_df, rnd),
+                pool.submit(
+                    self.store.append, "frontier_log",
+                    terminal.select(*frontier_cols), rnd,
+                ),
+            ]
+            summary_rows = (
+                fetch_summary.unionByName(fresh_summary)
+                .unionByName(bucket_summary)
+                .collect()
             )
-            summary_rows = fetch_summary.unionByName(fresh_summary).collect()
-            f_metrics.result()
-            f_log.result()
+            for f in appends:
+                f.result()
         t_summary = _time.time()
 
         agg: dict = {}
         fresh_counts: dict = {}
+        dirty: list[int] = []
         for r_ in summary_rows:
             if r_.k == "fresh":
                 fresh_counts[r_.job_id] = r_.c
+            elif r_.k == "bucket":
+                dirty.append(r_.c)
             else:
                 agg[(r_.job_id, r_.k)] = r_.c
 
@@ -833,12 +838,6 @@ class CrawlEngine:
         # shard merge (checkpoint + dirty-gen append) rides the same pool —
         # it reads only the cached fresh set and the previous shard state,
         # and SnapshotStore.append reserves slots under its lock.
-        fresh_keyed = with_dedup_key(
-            fresh.select("job_id", "url_hash"), self.num_buckets
-        )
-        dirty = [
-            r.bucket for r in fresh_keyed.select("bucket").distinct().collect()
-        ]
         with ThreadPoolExecutor(max_workers=4) as pool:
             f_shards = pool.submit(
                 self._commit_shard_delta,
@@ -898,14 +897,13 @@ class CrawlEngine:
         if self.profile:
             stats["t_phases"] = {
                 "defs": round(t_defs - t0, 2),
-                "fetch_extract_docs": round(t_docs_append - t_defs, 2),
-                "metrics_log_summary": round(t_summary - t_docs_append, 2),
+                "docs_metrics_log_summary": round(t_summary - t_defs, 2),
                 "final_writes": round(t_final - t_summary, 2),
             }
         self.round_stats.append(stats)
         flagged.unpersist()
         fetched.unpersist()
-        docs.unpersist()
+        cand.unpersist()
         fresh.unpersist()
         nf_cached.unpersist()
         return stats

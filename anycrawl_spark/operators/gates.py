@@ -463,7 +463,10 @@ def make_candidate_gate(
     kernel; everything else stays on the prefix fast path. Both dims are
     broadcast-sized (per-host config).
 
-    Returns a struct column fn: (job_id, url) -> struct<url, host, keep>.
+    Returns a struct column fn: (job_id, url, parent_url) -> struct<url,
+    host, keep>. Its ``.func`` is the plain per-batch kernel (pandas Series
+    in, DataFrame out) that ``spans.fetch_extract(link_gate=...)`` calls
+    inside the extraction pass — the crawl engine's path.
     """
     from anycrawl_spark.crawl.params import robots_decision
     from anycrawl_spark.functions.robots import robots_allowed_rfc

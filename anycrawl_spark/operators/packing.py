@@ -13,7 +13,9 @@ partitionBy collapses the entire table into ONE partition. Instead we run
 the textbook TWO-PHASE distributed prefix sum:
 
 1. range-repartition by the order key (Spark's RangePartitioner sampling;
-   partitions are contiguous, ordered slices);
+   partitions are contiguous, ordered slices) and materialize it once —
+   the sampler is seeded per evaluation, so re-running the repartition can
+   move rows across partition bounds between the two phases;
 2. per-partition token totals -> driver (O(partitions) rows, ~32-4096
    values) -> exclusive prefix offsets -> broadcast back;
 3. intra-partition cumulative sum with ``Window.partitionBy(pid)`` — each
@@ -43,8 +45,12 @@ def with_global_offsets(
     spark = docs.sparkSession
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
-    parted = docs.repartitionByRange(partitions, F.col(order_col)).withColumn(
-        "_pid", F.spark_partition_id()
+    # localCheckpoint: both phases must see the SAME range bounds, and the
+    # RangePartitioner re-samples (with a fresh seed) on every evaluation
+    parted = (
+        docs.repartitionByRange(partitions, F.col(order_col))
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
     # phase 1: O(partitions) totals to the driver. RangePartitioner keys
     # partitions in order-key order, so pid order IS stream order.

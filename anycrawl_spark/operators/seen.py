@@ -422,9 +422,13 @@ def filter_fresh(
         probed = _broadcast_probe(cand, shards, bc=shards_bc)
     else:
         probed = _cogroup_probe(cand, shards)
-    # NB: both branches re-evaluate `probed`; the probe is cheap (measured
-    # ~7M rows/s/stage warm) and DataFrame-cache compression costs more than
-    # it saves here — callers persist the final result if they reuse it
+    # NB: both branches re-evaluate `probed`, and with it the candidates'
+    # whole lineage. That is cheap only for JVM-only candidate lineage (the
+    # probe measured ~7M rows/s/stage warm; DataFrame-cache compression
+    # costs more than it saves). Callers whose candidates carry Python UDFs
+    # must persist them first, or every UDF runs once per branch (the crawl
+    # engine persists its deduped candidates). Callers persist the final
+    # result if they reuse it.
     definitely_fresh = probed.filter(~F.col("maybe_seen"))
     needs_exact = probed.filter(F.col("maybe_seen")).join(
         seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti"

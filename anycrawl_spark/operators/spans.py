@@ -9,7 +9,9 @@ DataExtractor.ts:230-341). Vectorized: one Python call per Arrow batch.
 
 Output carries ``links: array<string>`` (absolute, raw order) so the link
 expansion downstream is a built-in ``posexplode`` (the only table-generating
-transform, matching SURVEY §2.10).
+transform, matching SURVEY §2.10). ``fetch_extract`` can also gate the links
+in the same pass (``link_gate``): the crawl's candidate chain then starts
+from a JVM ``explode`` and no link crosses into Python a second time.
 """
 
 from __future__ import annotations
@@ -102,15 +104,58 @@ FETCHED_DOC = T.StructType(
 )
 
 
-def fetch_extract(sched: DataFrame, web=None) -> DataFrame:
+CAND_LINK = T.StructType(
+    [
+        T.StructField("ordinal", T.IntegerType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("host", T.StringType()),
+    ]
+)
+
+FETCHED_DOC_GATED = T.StructType(
+    FETCHED_DOC.fields + [T.StructField("cand_links", T.ArrayType(CAND_LINK))]
+)
+
+
+def _gate_links(link_gate, rows: list[dict]) -> None:
+    """Run ``link_gate`` once over every link of the batch and attach each
+    row's kept links as ``cand_links`` (``ordinal`` = position in the raw
+    ``links`` array, so first-wins order downstream is unchanged)."""
+    owner, ordinals, jobs, urls, parents = [], [], [], [], []
+    for i, row in enumerate(rows):
+        row["cand_links"] = None if row["links"] is None else []
+        for k, u in enumerate(row["links"] or ()):
+            owner.append(i); ordinals.append(k)
+            jobs.append(row["job_id"]); urls.append(u); parents.append(row["url"])
+    if not urls:
+        return
+    g = link_gate(
+        pd.Series(jobs, dtype=object), pd.Series(urls, dtype=object),
+        pd.Series(parents, dtype=object),
+    )
+    for i, k, u, h, keep in zip(owner, ordinals, g["url"], g["host"], g["keep"]):
+        if keep:
+            rows[i]["cand_links"].append({"ordinal": k, "url": u, "host": h})
+
+
+def fetch_extract(sched: DataFrame, web=None, link_gate=None) -> DataFrame:
     """Scheduled frontier rows -> fetch results + extracted docs in ONE
-    python pass. Non-200 rows carry null title/markdown/spans/links."""
+    python pass. Non-200 rows carry null title/markdown/spans/links.
+
+    ``link_gate``: an optional per-batch candidate gate — the plain function
+    behind ``make_candidate_gate(...)`` (its ``.func``), called as
+    ``link_gate(job_id, url, parent_url)`` on pandas Series and returning
+    ``url``/``host``/``keep`` columns. With it, the output gains
+    ``cand_links: array<struct<ordinal, url, host>>`` (the links the gate
+    kept, canonical, raw order; null on non-200 rows); without it the schema
+    is ``FETCHED_DOC``."""
     from anycrawl_spark import synth
 
     cfg = web or synth.DEFAULT_WEB
+    schema = FETCHED_DOC if link_gate is None else FETCHED_DOC_GATED
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FETCHED_DOC.fields]
+        cols = [f.name for f in schema.fields]
         for pdf in it:
             if pdf.empty:
                 continue
@@ -137,10 +182,12 @@ def fetch_extract(sched: DataFrame, web=None) -> DataFrame:
                         spans=doc["spans"], links=doc["links"],
                     )
                 rows.append(row)
+            if link_gate is not None:
+                _gate_links(link_gate, rows)
             yield pd.DataFrame(rows, columns=cols)
 
     cols = [
         "job_id", "url", "url_hash", "host", "depth", "discovery_seq",
         "parent_url_hash", "round_added", "attempt", "priority",
     ]
-    return sched.select(*cols).mapInPandas(batches, schema=FETCHED_DOC)
+    return sched.select(*cols).mapInPandas(batches, schema=schema)

@@ -157,7 +157,8 @@ class SnapshotStore:
         os.rename(tmp, final)
         self.manifest["tables"][table] = snap_id
         self._collect_lineage(final, None)
-        # stale snapshot GC: keep last 3 (Iceberg expire_snapshots analog)
+        # stale snapshot GC: keep the last 4 (snap_id-3 .. snap_id; Iceberg
+        # expire_snapshots analog)
         for old in range(max(0, snap_id - 3)):
             d = self._snap_dir(table, old)
             if os.path.exists(d):

@@ -30,6 +30,23 @@ def test_offsets_match_sequential_reference(spark):
         acc += n
 
 
+def test_offsets_match_sequential_reference_past_range_sample(spark):
+    """Each input partition holds more rows than RangePartitioner samples
+    from it, so the range bounds depend on the sampler's seed, which changes
+    per evaluation: both phases must read ONE materialized repartition."""
+    n = 6_400
+    sizes = [(i * 7919) % 97 for i in range(n)]
+    df = spark.createDataFrame(list(enumerate(sizes)), ["doc_id", "n_tokens"]) \
+        .repartition(8)
+    got = {r["doc_id"]: r["start_tok"]
+           for r in with_global_offsets(df, partitions=4).collect()}
+    acc, wrong = 0, 0
+    for i, k in enumerate(sizes):
+        wrong += got[i] != acc
+        acc += k
+    assert len(got) == n and wrong == 0, f"{wrong} of {n} offsets wrong"
+
+
 def test_offsets_invariant_to_partition_count(spark):
     sizes = list(range(0, 40))
     df = spark.createDataFrame(list(enumerate(sizes)), ["doc_id", "n_tokens"])
